@@ -51,27 +51,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_local.json")
     // clamp to >=1 and survive a malformed value: a crash here (or runs=0 making
     // dts.min throw) would lose the round's whole perf signal
     val runs = math.max(1,
       try sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
       catch { case _: NumberFormatException => 2 })
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE sizes shuffles from THIS width down: 32 fixed partitions made
-      // every sf100 reducer sort ~19M rows and spill (lineitem_leadtime_sla
-      // read 18× for 10× data), while a fixed 8×cpus taxed every sub-second
-      // sf0.1 query (VERDICT r10 #1b) — so the width now derives from the
-      // fixture's byte size (see FileSizing.initialShufflePartitions)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.sources.FileSizing.initialShufflePartitions(sfDir, cpus.toInt))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus, Some(sfDir))
     val loadStart = loadavg
     val gcStart = gcMillis
     val stealStart = stealTicks
@@ -88,29 +74,10 @@ object Bench {
     // the driver never sets it, so round benches always cover the registry
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    // Run structure (VERDICT r11 #1, adjudicated r12): the r11 interleave
-    // change landed without a same-host comparison against the r10 per-query
-    // back-to-back structure, so the driver's 268→339 s r10→r11 gap could not
-    // be attributed. The r12 A/B (same code, same host, steal 4357 vs 827
-    // ticks) measured interleaved 369.0 s vs back-to-back 273.5 s — geomean
-    // 1.44×, 319/361 queries >10% slower interleaved, a UNIFORM methodology
-    // tax: separating a query's two samples by a ~170 s registry pass makes
-    // both samples cold (JIT, parquet footer/file caches), so min-of-2 never
-    // sees a warm run. The stall-decorrelation the interleave bought is
-    // already covered by the sweep-level steal-retry guard below, so the
-    // default reverts to the r10 back-to-back structure (restoring
-    // comparability with BENCH_r10 and the BASELINE anchor);
-    // SPARK_GRAFT_BENCH_INTERLEAVED=1 keeps the interleaved form available
-    // for stall diagnostics. (SPARK_GRAFT_BENCH_LEGACY=1, the r12 A/B's
-    // original opt-in name, is accepted as a no-op alias of the default.)
-    val interleaved = sys.env.get("SPARK_GRAFT_BENCH_INTERLEAVED").contains("1")
-    // Runs are back-to-back per query by default (see the `interleaved`
-    // adjudication note above: the r11 interleaved-pass structure cost a
-    // uniform ~1.44× on min-of-2 because neither sample ran warm). The
-    // residual risk the interleave addressed — a time-localized host stall
-    // taxing both adjacent samples of one query — is bounded by the
-    // sweep-level steal-retry guard, and a stall invisible to the steal
-    // counter only ever makes the recorded number WORSE, never better.
+    // Both samples of a query run back to back: a same-host A/B measured
+    // the interleaved-pass alternative as a uniform 1.44× tax (neither sample
+    // ran warm), and the sweep-level steal-retry guard below bounds the
+    // host-stall risk interleaving was meant to spread.
     def sweep(errors: scala.collection.mutable.Map[String, String]): Seq[(String, Double)] = {
       val regAsc = SparkEntry.queries.toSeq.sortBy(_._1)
         .filter(kv => only.forall(_.contains(kv._1)))
@@ -135,12 +102,7 @@ object Bench {
         // is the best estimate of the code's true cost on this host
         if (dt < best(name)) best(name) = dt
       }
-      if (interleaved)
-        for (r <- 1 to runs;
-             (name, fn) <- if (r % 2 == 1) regAsc else regAsc.reverse) timeOne(name, fn)
-      else
-        // r10 structure: both samples of a query taken back-to-back
-        for ((name, fn) <- regAsc; _ <- 1 to runs) timeOne(name, fn)
+      for ((name, fn) <- regAsc; _ <- 1 to runs) timeOne(name, fn)
       best.toSeq
     }
     // Steal-retry guard (VERDICT r10 #8): the r10 local bench shipped at
@@ -152,21 +114,16 @@ object Bench {
     val maxSteal =
       try sys.env.getOrElse("SPARK_GRAFT_MAX_STEAL", "5000").toLong
       catch { case _: NumberFormatException => 5000L }
-    // The dedup shingle artifact (Dedup.docShingles: WriteOnce parquet +
-    // pinned localCheckpoint) is built once per session and shared by every
-    // dedup_* consumer, so whichever consumer ran FIRST in pass order used
-    // to absorb the build cost and every later one rode free — per-query
-    // numbers were order-dependent (VERDICT r11 #3). Building it HERE,
-    // before any sweep, as an explicitly timed pseudo-query makes each
-    // consumer's line measure its standalone marginal cost at any pass
-    // position, and the sharing is visible in the JSON instead of implicit.
-    // Timed OUTSIDE sweep() so a steal-retry keeps the real build time (the
-    // first in-sweep version recorded ~0 whenever the retry fired, because
-    // the kept second sweep only saw a memo hit); one sample, not
-    // min-of-runs, for the same reason. The line is appended to the selected
-    // sweep's results below, so the total still includes the build. Skipped
-    // under SPARK_GRAFT_BENCH_ONLY (filtered local iteration shouldn't pay
-    // an unconditional 2-3 s build).
+    // The dedup shingle artifact (Dedup.docShingles) is built once per
+    // session and shared by every dedup_* consumer, so whichever consumer ran
+    // first would absorb the build and every later one ride free (VERDICT r11
+    // #3). It is built here, before any sweep, as its own timed line: each
+    // consumer's line then measures its marginal cost at any position, and
+    // the total includes the build once. (Totals before that — r10 and the
+    // BASELINE anchor — effectively excluded it: the build landed in a
+    // consumer's first sample and min-of-2 kept the memo hit.) Timed outside
+    // sweep() with one sample so a steal-retry keeps the real build time;
+    // skipped under SPARK_GRAFT_BENCH_ONLY.
     var artifactErr: Option[String] = None
     val artifactLine: Option[(String, Double)] =
       if (only.isEmpty) {
@@ -202,7 +159,7 @@ object Bench {
       s""","runs":$runs,"agg":"min","loadavg_start":"$loadStart","loadavg_end":"$loadavg"""" +
       s""","gc_sec":${ms(gcSec)},"steal_ticks":$stealDelta""" +
       s""","sweep_steal_ticks":$sweepSteal,"steal_retried":$retried""" +
-      s""","harness":"${if (interleaved) "interleaved" else "back_to_back"}"""" +
+      s""","harness":"back_to_back"""" +
       s""","errors":${errors.size},"query_errors":$errJson}"""
     val short = s"""{"metric":"total","value":${ms(total)}}"""
     try Files.writeString(Paths.get(outPath), full + "\n" + short + "\n")

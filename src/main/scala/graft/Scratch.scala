@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev scratchpad + the documented smoke surface: runs the flagship
   * `SparkEntry.entry` on sf0.001 and prints the row count (see
   * .claude/skills/verify/SKILL.md §2 — driver t1 expects `ENTRY ROWS: <n>`).
   */
 object Scratch {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(2, None)
     val n = SparkEntry.entry(spark).count()
     println(s"ENTRY ROWS: $n")
     spark.stop()

@@ -17,10 +17,10 @@ object Tables {
     * rejects the NANOS form at schema-conversion time, so that form is read
     * as raw INT64 nanos via an explicit schema and truncated to micros with
     * exact integer division (matching DuckDB's own nanos→micros truncation);
-    * the MICROS form reads natively. The unit is detected ONCE per dir from
-    * the footer (whether a native schema read succeeds) and memoized — a
-    * wrong guess here would silently collapse every timestamp into 1970, so
-    * detection must come from the file, not from an assumption.
+    * the MICROS form reads natively. The unit is detected from the footer
+    * (whether a native schema read succeeds) and memoized per table version —
+    * a wrong guess here would silently collapse every timestamp into 1970,
+    * so detection must come from the file, not from an assumption.
     */
   val eventsRawSchema: StructType = StructType(Seq(
     StructField("event_id", LongType), StructField("ts", LongType),
@@ -35,19 +35,18 @@ object Tables {
   /** `ts`'s inferable Spark type per dir: TimestampType (MICROS, UTC-adjusted),
     * TimestampNTZType (MICROS, isAdjustedToUTC=false — what pandas/pyarrow
     * writers emit), or None when the footer carries NANOS (schema inference
-    * throws and the raw-INT64 path applies). Probed once, memoized. */
-  private val tsTypeByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[DataType]]()
-
-  private def nativeTsType(spark: SparkSession, dir: String): Option[DataType] =
-    tsTypeByDir.computeIfAbsent(dir, _ =>
+    * throws and the raw-INT64 path applies). Probed once per table version. */
+  private def nativeTsType(spark: SparkSession, dir: String): Option[DataType] = {
+    val table = s"$dir/events.parquet"
+    graft.functions.Memo(s"$table#ts_type", graft.functions.Memo.fingerprint(spark, table)) {
       try {
-        spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType match {
+        spark.read.parquet(table).schema("ts").dataType match {
           case t @ (TimestampType | TimestampNTZType) => Some(t)
           case _ => None
         }
       } catch { case scala.util.control.NonFatal(_) => None }
-    )
+    }
+  }
 
   /** NTZ micros cast to TimestampType is the identity wall-clock mapping under
     * the UTC session timezone every graft session pins — the same naive

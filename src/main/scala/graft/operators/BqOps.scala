@@ -38,7 +38,7 @@ object BqOps {
     * discipline.
     */
   private def thresholds(spark: SparkSession, dir: String): Seq[Double] =
-    Similarity.statsFor(spark, s"$dir#bq") {
+    Similarity.indexFor(spark, dir, "bq") {
       PqOps.emb(spark, dir)
         .select(posexplode(col("v")))
         .groupBy(col("pos"))

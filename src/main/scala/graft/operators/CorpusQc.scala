@@ -743,7 +743,7 @@ object CorpusQc {
     val proj = docs(spark, dir)
       .select(col("doc_id"), col("source"), size(words).cast("long").as("n_tokens"))
     val bkt = EventsOps.longBuckets(proj, col("n_tokens"), EventsOps.SeriesBlockRows,
-      Some(s"$dir#documents.n_tokens"))
+      Some(s"$dir/documents.parquet#n_tokens"))
     EventsOps.blockedRankPrefix(proj, "source", Seq(col("n_tokens"), col("doc_id")),
         bkt, col("n_tokens"), "_rn", "cum_before", Some("total"))
       .withColumn("phase",

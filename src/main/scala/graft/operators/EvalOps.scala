@@ -491,7 +491,7 @@ object EvalOps {
     val ranked = EventsOps.blockedRank(ev, "event_type",
         Seq(col("c"), col("event_id")),
         EventsOps.longBuckets(ev, col("c"), EventsOps.SeriesBlockRows,
-          Some(s"$dir#events.cents")), "rn")
+          Some(s"$dir/events.parquet#cents")), "rn")
       .join(broadcast(nTab), "event_type")
     val thr = ranked.groupBy("event_type")
       .agg(max(when(col("rn") === kOf(1, 100), col("c"))).as("lo"),

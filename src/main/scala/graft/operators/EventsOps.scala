@@ -120,36 +120,31 @@ object EventsOps {
       .drop("_bkt", "_v", "_offc", "_offs")
   }
 
-  /** Session-wide (dir, column-label) → (min, max, count) stats memo for the
-    * bucket builders below. Bucket boundaries only need to be a MONOTONE
-    * function of the order column — any (mn, width > 0) satisfies that — so
-    * serving a query from stats scanned once per fixture dir is
-    * correctness-neutral (only balance could drift, and the fixture is
-    * static within a session anyway). Without this, every blockedRank query
-    * paid its own eager min/max/count scan of the fact table: the r10 driver
-    * bench measured that as a ~0.1–0.4 s uniform tax across the ~330 small
-    * sf0.1 queries (VERDICT r10 #1a). Keyed by caller-supplied identity, not
-    * DataFrame reference — plan objects don't hash stably.
+  /** (min, max, count) of `c` for the bucket builders below, memoized when
+    * `memoKey` (`<table path>#<column label>`, the table `df` reads) is set.
+    * Bucket boundaries only need to be a MONOTONE function of the order
+    * column — any (mn, width > 0) satisfies that — so serving a query from
+    * stats scanned once per table version is correctness-neutral. Without the
+    * memo every blockedRank query paid its own eager min/max/count scan of
+    * the fact table: the r10 bench measured that as a ~0.1–0.4 s
+    * uniform tax across the ~330 small sf0.1 queries (VERDICT r10 #1a).
+    * Keyed by caller-supplied identity, not DataFrame reference — plan
+    * objects don't hash stably.
     */
-  private val bucketStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.Row]()
-
   private def bucketStats(df: DataFrame, c: Column,
-                          cacheKey: Option[String]): org.apache.spark.sql.Row = {
+                          memoKey: Option[String]): org.apache.spark.sql.Row = {
     def scan = df.agg(min(c).as("mn"), max(c).as("mx"), count(lit(1)).as("cnt")).head()
-    cacheKey match {
-      case Some(k) => bucketStatsCache.computeIfAbsent(k, _ => scan)
-      case None    => scan
-    }
+    memoKey.fold(scan)(k => graft.functions.Memo(k,
+      graft.functions.Memo.fingerprint(df.sparkSession, k.takeWhile(_ != '#')))(scan))
   }
 
   /** Monotone equal-width buckets of a long column, sized for ~`blockRows`
     * rows per bucket under a uniform spread (one tiny stats action per
-    * (dir, column) when `cacheKey` is set — see [[bucketStats]]; the
+    * table version when `memoKey` is set — see [[bucketStats]]; the
     * literals fold into the plan, the IVF-centroid stance). */
   private[graft] def longBuckets(df: DataFrame, c: Column, blockRows: Long,
-                                 cacheKey: Option[String] = None): Column = {
-    val s = bucketStats(df, c, cacheKey)
+                                 memoKey: Option[String] = None): Column = {
+    val s = bucketStats(df, c, memoKey)
     if (s.isNullAt(0)) lit(0L)
     else {
       val (mn, mx, cnt) = (s.getLong(0), s.getLong(1), s.getLong(2))
@@ -161,8 +156,8 @@ object EventsOps {
 
   /** Monotone equal-width buckets of a double column (same contract). */
   private[graft] def doubleBuckets(df: DataFrame, c: Column, blockRows: Long,
-                                   cacheKey: Option[String] = None): Column = {
-    val s = bucketStats(df, c, cacheKey)
+                                   memoKey: Option[String] = None): Column = {
+    val s = bucketStats(df, c, memoKey)
     if (s.isNullAt(0) || s.getDouble(0) == s.getDouble(1)) lit(0L)
     else {
       val (mn, mx, cnt) = (s.getDouble(0), s.getDouble(1), s.getLong(2))
@@ -187,7 +182,7 @@ object EventsOps {
       .select(col(key), col("ts"), col("event_id"), col("value"))
     blockedRank(ev, key, Seq(col("ts"), col("event_id")),
       longBuckets(ev, unix_micros(col("ts")), blockRows,
-        Some(s"$dir#events.ts_micros")), "rn")
+        Some(s"$dir/events.parquet#ts_micros")), "rn")
       .withColumn("t", (col("rn") - 1).cast("int"))
       .select(col(key), col("value"), col("t"))
   }
@@ -1051,7 +1046,7 @@ object EventsOps {
     val nRef = ref.groupBy("event_type").agg(count(lit(1)).as("n"))
     val ranked = blockedRank(ref, "event_type", Seq(col("value"), col("event_id")),
         doubleBuckets(ref, col("value"), SeriesBlockRows,
-          Some(s"$dir#events.value@psi_ref")), "rn")
+          Some(s"$dir/events.parquet#value@psi_ref")), "rn")
       .join(broadcast(nRef), "event_type")
     // ⌈i·n/10⌉ = (i·n+9) div 10; Column `/` is double division, so the div is
     // floor(double) — exact here since i·n+9 < 2^53 and non-integer quotients
@@ -1217,7 +1212,7 @@ object EventsOps {
     // is tie-insensitive — min over equal values)
     val ranked = blockedRank(ev, "event_type", Seq(col("value")),
         doubleBuckets(ev, col("value"), SeriesBlockRows,
-          Some(s"$dir#events.value")), "rn")
+          Some(s"$dir/events.parquet#value")), "rn")
       .join(broadcast(counts), "event_type")
     def pos(q: Double) = (col("n") - 1).cast("double") * q + 1.0
     val boundary = Quantiles.map { case (q, _) =>
@@ -1373,7 +1368,7 @@ object EventsOps {
       .select(col("event_type"), col("ts"), col("event_id"), col("value"))
     val ranked = blockedRank(ev, "event_type", Seq(col("ts"), col("event_id")),
         longBuckets(ev, unix_micros(col("ts")), blockRows,
-          Some(s"$dir#events.ts_micros")), "rn")
+          Some(s"$dir/events.parquet#ts_micros")), "rn")
       .withColumn("t", col("rn") - 1).drop("rn", "ts")
     val (aug, wTrail) = haloBlocks(ranked, "event_type", -AnomalyWin, -1, block)
     unHalo(aug
@@ -2822,7 +2817,7 @@ object EventsOps {
       .otherwise(r + ceil((col("rn") - r * (q + 1)) / greatest(q, lit(1L))))
     blockedRank(ev, "event_type", Seq(col("value"), col("event_id")),
         doubleBuckets(ev, col("value"), blockRows,
-          Some(s"$dir#events.value")), "rn")
+          Some(s"$dir/events.parquet#value")), "rn")
       .join(broadcast(nTab), "event_type")
       .withColumn("decile", decile.cast("int"))
       .groupBy("event_type", "decile")

@@ -89,25 +89,10 @@ object OpqOps {
     EigenBasis(values, loadings)
   }
 
-  /** The basis is an index like the IVF quantizer / PQ codebooks: fit once
-    * per corpus, content-fingerprint invalidation, restart-scoped. */
-  private val basisCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, EigenBasis)]()
-  private val basisLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  private[graft] def basisFor(spark: SparkSession, dir: String): EigenBasis = {
-    val fp = Similarity.corpusFingerprint(spark, dir)
-    val lock = basisLocks.computeIfAbsent(dir, _ => new Object)
-    lock.synchronized {
-      val prev = basisCache.get(dir)
-      if (prev != null && prev._1 == fp) prev._2
-      else {
-        val b = deflatedBasis(Similarity.covarianceR6(spark, dir)._2, Dim)
-        basisCache.put(dir, (fp, b)); b
-      }
+  private[graft] def basisFor(spark: SparkSession, dir: String): EigenBasis =
+    Similarity.indexFor(spark, dir, "opq_basis") {
+      deflatedBasis(Similarity.covarianceR6(spark, dir)._2, Dim)
     }
-  }
 
   /** Snake-draft eigenvalue allocation: extraction rank p → subspace slot.
     * Round r = p / M deals one eigenvector to every subspace, reversing
@@ -140,7 +125,7 @@ object OpqOps {
   }
 
   private def fittedOpq(spark: SparkSession, dir: String): Codebook =
-    PqOps.codebookFor(spark, s"$dir#opq") {
+    Similarity.indexFor(spark, dir, "opq") {
       val (e, ids) = graft.functions.Checkpoints.tracked(rotated(spark, dir))
       try PqOps.lloydPq(e, M)
       finally graft.functions.Checkpoints.release(e, ids, blocking = true)

@@ -95,29 +95,8 @@ object PqOps {
     cb
   }
 
-  /** Codebooks are an index (the IVF-quantizer stance): fit once per corpus,
-    * guarded by the same listing-level content fingerprint, fit outside the
-    * map's bin locks.
-    */
-  private val codebookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Codebook)]()
-  private val codebookLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** `key` is `dir#m=<subspaces>` so each operating point caches its own fit
-    * (the fingerprint still comes from the DIR the key embeds). */
-  private[operators] def codebookFor(spark: SparkSession, key: String)(fit: => Codebook): Codebook = {
-    val fp = Similarity.corpusFingerprint(spark, key.takeWhile(_ != '#'))
-    val lock = codebookLocks.computeIfAbsent(key, _ => new Object)
-    lock.synchronized {
-      val prev = codebookCache.get(key)
-      if (prev != null && prev._1 == fp) prev._2
-      else { val c = fit; codebookCache.put(key, (fp, c)); c }
-    }
-  }
-
   private def fittedM(spark: SparkSession, dir: String, numSub: Int): Codebook =
-    codebookFor(spark, s"$dir#m=$numSub") {
+    Similarity.indexFor(spark, dir, s"m=$numSub") {
       val (e, ids) = graft.functions.Checkpoints.tracked(
         emb(spark, dir).select("vec_id", "v"))
       try lloydPq(e, numSub)

@@ -40,7 +40,7 @@ object SqOps {
     * reconstructs to mn + Δ/2 = mn exactly.
     */
   private def statsArr(spark: SparkSession, dir: String): (Seq[Double], Seq[Double]) =
-    Similarity.statsFor(spark, s"$dir#sq8") {
+    Similarity.indexFor(spark, dir, "sq8") {
       val rows = emb(spark, dir)
         .select(posexplode(col("v")))
         .groupBy(col("pos")).agg(min(col("col")).as("mn"), max(col("col")).as("mx"))

@@ -187,7 +187,7 @@ object TextOps {
     val proj = docs(spark, dir)
       .select(col("doc_id"), col("source"), size(words).cast("long").as("n_tokens"))
     val bkt = EventsOps.longBuckets(proj, col("doc_id"), EventsOps.SeriesBlockRows,
-      Some(s"$dir#documents.doc_id"))
+      Some(s"$dir/documents.parquet#doc_id"))
     EventsOps.blockedRankPrefix(proj, "source", Seq(col("doc_id")),
         bkt, col("n_tokens"), "_rn", "_cum_before")
       .select(col("doc_id"), col("source"), col("n_tokens"),

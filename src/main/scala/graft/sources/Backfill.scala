@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.Tables
+import graft.functions.Memo
 import graft.functions.Num._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -54,7 +55,8 @@ object Backfill {
   }
 
   def ensure(spark: SparkSession, dir: String): Unit =
-    WriteOnce.ensure(location(spark).toString, dir)(writeAndBackfill(spark, dir))
+    Memo(location(spark).toString, Memo.fingerprint(spark, s"$dir/events.parquet"))(
+      writeAndBackfill(spark, dir))
 
   def backfilledDailyAgg(spark: SparkSession, dir: String): DataFrame = {
     ensure(spark, dir)

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.Tables
+import graft.functions.Memo
 import graft.functions.Num._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -88,8 +89,9 @@ object Compaction {
   }
 
   private def ensureLayouts(spark: SparkSession, dir: String): Unit = {
-    WriteOnce.ensure(fragmentedLocation(spark).toString, dir)(writeFragmented(spark, dir))
-    WriteOnce.ensure(compactedLocation(spark).toString, dir)(writeCompacted(spark))
+    val source = Memo.fingerprint(spark, s"$dir/events.parquet")
+    Memo(fragmentedLocation(spark).toString, source)(writeFragmented(spark, dir))
+    Memo(compactedLocation(spark).toString, source)(writeCompacted(spark))
   }
 
   /** (layout, event_date, n_files, n_rows) — the before/after evidence. */

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.Tables
+import graft.functions.Memo
 import graft.functions.Num._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -31,17 +32,16 @@ object Partitioned {
       .write.partitionBy("event_date")
       .mode("overwrite").parquet(location(spark).toString)
 
-  /** location → source dir it was last written from. Rewriting on EVERY
-    * invocation (the pre-r5 behavior) made the registered query benchmark the
-    * overwrite more than the pruned read, and a concurrent reader could
-    * observe the location mid-overwrite (ADVICE r4). The layout is an index:
-    * write once per (location, source dir) — the quantizerCache pattern — and
-    * rewrite only when a different source dir targets the same location
-    * (concurrent first calls serialize on [[WriteOnce]]'s per-key lock, kept
-    * OUTSIDE the map's own bin locks per ADVICE r5).
+  /** Rewriting on EVERY invocation (the pre-r5 behavior) made the
+    * registered query benchmark the overwrite more than the pruned read, and
+    * a concurrent reader could observe the location mid-overwrite (ADVICE
+    * r4). The layout is an index: written once per version of the source
+    * `events` table, rewritten when a different (or rewritten) source
+    * targets the same location.
     */
   private def ensurePartitionedEvents(spark: SparkSession, dir: String): Unit =
-    WriteOnce.ensure(location(spark).toString, dir)(writePartitionedEvents(spark, dir))
+    Memo(location(spark).toString, Memo.fingerprint(spark, s"$dir/events.parquet"))(
+      writePartitionedEvents(spark, dir))
 
   /** The pruned read, exposed separately so the spec can inspect the plan. */
   def prunedRead(spark: SparkSession): DataFrame =

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.Tables
+import graft.functions.Memo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -41,7 +42,8 @@ object RangeLayout {
       .write.mode("overwrite").parquet(location(spark).toString)
 
   def ensureRangeSorted(spark: SparkSession, dir: String): Unit =
-    WriteOnce.ensure(location(spark).toString, dir)(writeRangeSorted(spark, dir))
+    Memo(location(spark).toString, Memo.fingerprint(spark, s"$dir/events.parquet"))(
+      writeRangeSorted(spark, dir))
 
   /** Read-back with file provenance, for asserting the layout contract. */
   def fileStats(spark: SparkSession, dir: String): DataFrame = {

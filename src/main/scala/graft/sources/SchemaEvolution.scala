@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.Tables
+import graft.functions.Memo
 import graft.functions.Num._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,7 +23,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale: schema merging reads FOOTERS, not data — cost is per-file metadata,
   * and the per-generation writes/reads stay full parallel scans. The write
-  * happens once per (location, source dir) via [[WriteOnce]]; sums use exact
+  * happens once per (location, source table version) via [[Memo]]; sums use exact
   * integer micros so generation interleaving cannot perturb the hash.
   */
 object SchemaEvolution {
@@ -48,7 +49,8 @@ object SchemaEvolution {
   }
 
   private def ensure(spark: SparkSession, dir: String): Unit =
-    WriteOnce.ensure(location(spark).toString, dir)(writeGenerations(spark, dir))
+    Memo(location(spark).toString, Memo.fingerprint(spark, s"$dir/events.parquet"))(
+      writeGenerations(spark, dir))
 
   /** The merged read, exposed for the spec to assert the union schema. */
   def mergedRead(spark: SparkSession): DataFrame =

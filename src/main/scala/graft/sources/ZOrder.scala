@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.Tables
+import graft.functions.Memo
 import graft.functions.Num._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -158,7 +159,8 @@ object ZOrder {
   }
 
   def ensureZOrdered(spark: SparkSession, dir: String): Unit =
-    WriteOnce.ensure(location(spark).toString, dir)(writeZOrdered(spark, dir))
+    Memo(location(spark).toString, Memo.fingerprint(spark, s"$dir/events.parquet"))(
+      writeZOrdered(spark, dir))
 
   /** The r6 FIXED-GRID key (user mod 16, 2-day bucket from a constant epoch
     * origin) — kept only as ZOrderSpec's degenerate comparator: under a

@@ -287,13 +287,15 @@ object StreamingOps {
   def streamMvMerge(spark: SparkSession, dir: String): DataFrame = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_mv_").toFile.getAbsolutePath
     val cur = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val q = Tables.eventsStream(spark, dir).writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        mvMergeBatch(batch, id, tmp, cur)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    withStreamWidth(spark, s"$dir/events.parquet") {
+      val q = Tables.eventsStream(spark, dir).writeStream
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          mvMergeBatch(batch, id, tmp, cur)
+        }
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+    }
     // a source that listed zero files would leave cur null — fail loudly
     // naming the cause rather than NPE-ing inside the parquet reader
     require(cur.get != null,

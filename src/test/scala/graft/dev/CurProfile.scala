@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.{Curation, Dedup, TextOps}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiler: phase split of the docs_curation_report chain (quality gate,
   * language-ID gate, exact-dedup window, near-dup demotion pairs, full
@@ -15,15 +14,7 @@ import org.apache.spark.sql.SparkSession
 object CurProfile {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.sources.FileSizing.initialShufflePartitions(dir, 32))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus, Some(dir))
 
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev profiler: phase split of the minhashPairs chain — the component the
@@ -15,15 +15,7 @@ import org.apache.spark.sql.functions._
 object DedupProfile {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.sources.FileSizing.initialShufflePartitions(dir, 32))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.envCpus, Some(dir))
 
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime; val r = f
@@ -34,7 +26,7 @@ object DedupProfile {
     def drain(df: DataFrame, c: String): Unit =
       df.agg(count(lit(1)), sum(xxhash64(col(c)).cast("double"))).collect()
 
-    // cold: artifact write (WriteOnce) + memo checkpoint
+    // cold: shingle derive + persist (the Memo build)
     val sh = time("shingles.cold")(Dedup.minhashPairs(spark, dir))
     // the full query, warm memo — the number the decade ratio is built on
     time("pairs.full_warm")(drain(Dedup.minhashPairs(spark, dir), "jaccard"))

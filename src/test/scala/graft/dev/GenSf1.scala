@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal fixture: N key-offset replicas of the driver's sf0.1
@@ -40,14 +40,7 @@ object GenSf1 {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir) = args.take(2)
     val replicas = args.drop(2).headOption.map(_.toInt).getOrElse(Replicas)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus, None)
 
     def write(name: String, df: DataFrame): Unit = {
       df.write.mode("overwrite").parquet(s"$outDir/$name.parquet")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the formatted physical plan of selected registered queries
   * (args = query names; no args = a default set of recently-added ones). Used
@@ -10,13 +9,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val names = if (args.nonEmpty) args.toSeq
       else Seq("ts_value_quantiles_scalable", "text_tfidf", "events_stratified_sample")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.envCpus, None)
     names.foreach { n =>
       println(s"\n===== $n =====")
       SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").explain("formatted")

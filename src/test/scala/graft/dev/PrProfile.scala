@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev profiler: phase split of graph_pagerank (edge build, per-iteration
@@ -11,12 +10,7 @@ import org.apache.spark.sql.functions._
 object PrProfile {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.envCpus, Some(dir))
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime; val r = f
       println(f"PRPROF $label ${(System.nanoTime - t0) / 1e9}%.2f s"); r

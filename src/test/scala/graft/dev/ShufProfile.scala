@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{EventsOps, Relational, TextOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,15 +16,7 @@ import org.apache.spark.sql.functions._
 object ShufProfile {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.sources.FileSizing.initialShufflePartitions(dir, 32))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.envCpus, Some(dir))
 
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime; val r = f

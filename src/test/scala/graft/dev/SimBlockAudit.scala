@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev audit: bucket-size distribution of the behavioral-similarity SRP
@@ -11,13 +10,7 @@ import org.apache.spark.sql.functions._
 object SimBlockAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("tmp/sf10")
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.envCpus, Some(dir))
     val bands = graft.operators.EvalOps.userSimBandsDebug(spark, dir)
     val sizes = bands.groupBy("band", "bkey").agg(count(lit(1)).as("n"))
       .localCheckpoint(true)

@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.{FileSizing, ZOrder}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev profiler: phase split of the z-order write path (count gate, stats
@@ -12,13 +11,7 @@ import org.apache.spark.sql.functions._
 object ZProfile {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.envCpus, Some(dir))
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime; val r = f
       println(f"ZPROF $label ${(System.nanoTime - t0) / 1e9}%.2f s"); r
