@@ -1,7 +1,9 @@
 package graft.functions
 
+import graft.plans.{DetGauss, DetU01}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Deterministic, cross-engine pseudo-random columns (SURVEY.md §7.2).
   *
@@ -17,13 +19,15 @@ import org.apache.spark.sql.functions._
   * [[Num.r6]].
   *
   * Keys must satisfy |key| < 2e11 so that key*40503 stays exact.
+  *
+  * On the Spark side each draw is ONE native expression
+  * ([[graft.plans.DetU01]] / [[graft.plans.DetGauss]]) whose kernel replays
+  * the LCG and Box-Muller arithmetic below in the same order: the composed
+  * Column form repeated its key 16 times per uniform and analyzed to ~280
+  * nodes per `u01` and ~560 per `gauss`, which made driver-side analysis,
+  * planning and Janino compilation cost more than the draws themselves.
   */
 object DetRand {
-  val M = 2147483648.0 // 2^31
-
-  private def fmod(x: Column): Column = x - floor(x / M).cast("double") * M
-  private def lcg(x: Column): Column = fmod(x * 69069.0 + 12345.0)
-
   /** Uniform (0,1), bit-identical in Spark and DuckDB ([[sqlU01]]).
     *
     * The first multiplier is stream-dependent: with a shared multiplier,
@@ -33,20 +37,15 @@ object DetRand {
     * white-noise moments test). Distinct multipliers per stream break the
     * affine relation.
     */
-  def u01(key: Column, stream: Int): Column = {
-    val seed = fmod(key * 40503.0 + stream.toDouble * 30011.0 + 12345.0)
-    (lcg(lcg(fmod(seed * (69069.0 + 2.0 * stream)))) + 0.5) / M
-  }
+  def u01(key: Column, stream: Int): Column =
+    Bridge.column(DetU01(Bridge.expression(key), stream))
 
   def uniform(key: Column, stream: Int, lo: Double, hi: Double): Column =
     u01(key, stream) * (hi - lo) + lo
 
   /** Standard normal via Box-Muller; consumes streams 2s and 2s+1. */
-  def gauss(key: Column, stream: Int): Column = {
-    val u1 = u01(key, 2 * stream)
-    val u2 = u01(key, 2 * stream + 1)
-    sqrt(lit(-2.0) * log(u1)) * cos(lit(2.0 * math.Pi) * u2)
-  }
+  def gauss(key: Column, stream: Int): Column =
+    Bridge.column(DetGauss(Bridge.expression(key), stream))
 
   // ---- DuckDB SQL twins (same arithmetic, same op order) ----
 

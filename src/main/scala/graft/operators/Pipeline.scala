@@ -5,6 +5,7 @@ import graft.functions.Num._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** End-to-end pipeline parity with the reference's flagship entry point
   * (SURVEY.md §3.1: config → generate → split → noise → per-epoch losses →
@@ -125,8 +126,9 @@ object Pipeline {
       .select(col("epoch").as("best_epoch"), col("loss").as("val_loss"))
       .withColumn("function_type", lit(cfg.function_type))
       .withColumn("timesteps", lit(cfg.timesteps))
-    val dir = s"/tmp/graft_ckpt_${java.util.UUID.randomUUID().toString.take(8)}"
-    best.write.mode("overwrite").parquet(dir) // G13 sink
+    // the returned frame reads `dir` lazily, so it lives until JVM exit
+    val dir = s"${Bridge.tempDir("graft_ckpt")}/best"
+    best.write.parquet(dir)                   // G13 sink
     spark.read.parquet(dir)                   // G13 source
   }
 

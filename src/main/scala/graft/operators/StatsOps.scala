@@ -28,6 +28,17 @@ import org.apache.spark.sql.functions._
   */
 object StatsOps {
 
+  /** Mean of fx2 (integer-cent) values from their sum `s` over `n` rows. */
+  private def fx2Mean(s: Column, n: Column): Column = s.cast("double") / 1e2 / n.cast("double")
+
+  /** Sample variance of fx2 (integer-cent) values from their sum of squares
+    * `ss`, sum `s` and count `n`. Each query's DuckDB twin spells out the
+    * same formula in its own SQL.
+    */
+  private def fx2Var(ss: Column, s: Column, n: Column): Column =
+    (ss.cast("double") / 1e4 - (s.cast("double") / 1e2) * (s.cast("double") / 1e2) /
+      n.cast("double")) / (n - 1L).cast("double")
+
   /** Kolmogorov's c(α) at α=0.05 — reject when λ = D·√(n_a·n_b/(n_a+n_b))
     * exceeds it. */
   val KsCrit05 = 1.358
@@ -752,10 +763,6 @@ object StatsOps {
         fx(col("y").cast("double") / 1e2 -
           col("theta") * (col("x").cast("double") / 1e2 - col("xbar")), 2).as("q"),
         col("theta"))
-    def vr(s2: Column, s1: Column, n: Column): Column =
-      (s2.cast("double") / 1e4 -
-        (s1.cast("double") / 1e2) * (s1.cast("double") / 1e2) / n.cast("double")) /
-        (n - 1L).cast("double")
     adj.groupBy("arm")
       .agg(count(lit(1)).as("n_users"),
         sum(col("y")).as("sy"), sum(col("y") * col("y")).as("syy"),
@@ -764,10 +771,10 @@ object StatsOps {
       .select(col("arm"), col("n_users"),
         r6(col("sy").cast("double") / 1e2 / col("n_users").cast("double")).as("mean_y"),
         r6(col("sq").cast("double") / 1e2 / col("n_users").cast("double")).as("mean_y_adj"),
-        r6(vr(col("syy"), col("sy"), col("n_users"))).as("var_y"),
-        r6(vr(col("sqq"), col("sq"), col("n_users"))).as("var_y_adj"),
-        r6(lit(1.0) - vr(col("sqq"), col("sq"), col("n_users")) /
-          vr(col("syy"), col("sy"), col("n_users"))).as("var_reduction"),
+        r6(fx2Var(col("syy"), col("sy"), col("n_users"))).as("var_y"),
+        r6(fx2Var(col("sqq"), col("sq"), col("n_users"))).as("var_y_adj"),
+        r6(lit(1.0) - fx2Var(col("sqq"), col("sq"), col("n_users")) /
+          fx2Var(col("syy"), col("sy"), col("n_users"))).as("var_reduction"),
         r6(col("theta")).as("theta"))
   }
 
@@ -1514,15 +1521,11 @@ object StatsOps {
         sum((lit(1L) - col("we")) * col("c")).as("s_wd"),
         sum(col("we") * col("c") * col("c")).as("ss_we"),
         sum((lit(1L) - col("we")) * col("c") * col("c")).as("ss_wd"))
-    def mean(s: Column, n: Column) = s.cast("double") / 1e2 / n.cast("double")
-    def vr(ss: Column, s: Column, n: Column) =
-      (ss.cast("double") / 1e4 - (s.cast("double") / 1e2) * (s.cast("double") / 1e2) /
-        n.cast("double")) / (n - 1L).cast("double")
-    val mWe = mean(col("s_we"), col("n_we"))
-    val mWd = mean(col("s_wd"), col("n_wd"))
+    val mWe = fx2Mean(col("s_we"), col("n_we"))
+    val mWd = fx2Mean(col("s_wd"), col("n_wd"))
     val t = (mWe - mWd) / sqrt(
-      vr(col("ss_we"), col("s_we"), col("n_we")) / col("n_we").cast("double") +
-        vr(col("ss_wd"), col("s_wd"), col("n_wd")) / col("n_wd").cast("double"))
+      fx2Var(col("ss_we"), col("s_we"), col("n_we")) / col("n_we").cast("double") +
+        fx2Var(col("ss_wd"), col("s_wd"), col("n_wd")) / col("n_wd").cast("double"))
     g.select(col("event_type"), col("n_we"), col("n_wd"),
       r6(mWe).as("mean_weekend"), r6(mWd).as("mean_weekday"),
       r6(mWe / mWd - 1.0).as("lift"), r6(t).as("t_welch"))
@@ -1591,11 +1594,7 @@ object StatsOps {
         max(when(col("treated") === 1L, col("syy"))).as("syy_b"))
       .filter(col("n_a").isNotNull && col("n_b").isNotNull &&
         col("n_a") > 1L && col("n_b") > 1L)
-    def mean(s: Column, n: Column) = s.cast("double") / 1e2 / n.cast("double")
-    def vr(ss: Column, s: Column, n: Column) =
-      (ss.cast("double") / 1e4 - (s.cast("double") / 1e2) * (s.cast("double") / 1e2) /
-        n.cast("double")) / (n - 1L).cast("double")
-    val diff = mean(col("sy_b"), col("n_b")) - mean(col("sy_a"), col("n_a"))
+    val diff = fx2Mean(col("sy_b"), col("n_b")) - fx2Mean(col("sy_a"), col("n_a"))
     val wAll = Window.partitionBy()
     val t = piv
       .withColumn("nb_tot", sum(col("n_b")).over(wAll))
@@ -1603,12 +1602,12 @@ object StatsOps {
       .withColumn("att",
         sum(fx(col("w") * diff, 12)).over(wAll).cast("double") / 1e12)
       .withColumn("se_att", sqrt(sum(fx(col("w") * col("w") *
-        (vr(col("syy_a"), col("sy_a"), col("n_a")) / col("n_a").cast("double") +
-          vr(col("syy_b"), col("sy_b"), col("n_b")) / col("n_b").cast("double")), 12))
+        (fx2Var(col("syy_a"), col("sy_a"), col("n_a")) / col("n_a").cast("double") +
+          fx2Var(col("syy_b"), col("sy_b"), col("n_b")) / col("n_b").cast("double")), 12))
         .over(wAll).cast("double") / 1e12))
     t.select(col("stratum"), col("n_a"), col("n_b"),
-      r6(mean(col("sy_a"), col("n_a"))).as("mean_control"),
-      r6(mean(col("sy_b"), col("n_b"))).as("mean_treated"),
+      r6(fx2Mean(col("sy_a"), col("n_a"))).as("mean_control"),
+      r6(fx2Mean(col("sy_b"), col("n_b"))).as("mean_treated"),
       r6(diff).as("diff"), r6(col("w")).as("weight"),
       r6(col("att")).as("att"), r6(col("se_att")).as("se_att"))
   }

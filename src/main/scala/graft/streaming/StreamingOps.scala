@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.Trigger
 import graft.Tables
 import graft.functions.Num.{r6, sqlR6}
@@ -285,7 +286,8 @@ object StreamingOps {
     * drains the events parquet under AvailableNow.
     */
   def streamMvMerge(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mv_").toFile.getAbsolutePath
+    // the returned frame reads the final state lazily, so it lives until JVM exit
+    val tmp = Bridge.tempDir("graft_mv")
     val cur = new java.util.concurrent.atomic.AtomicReference[String](null)
     withStreamWidth(spark, s"$dir/events.parquet") {
       val q = Tables.eventsStream(spark, dir).writeStream

@@ -27,6 +27,14 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(ident, info, builder)
 
+  /** A fresh directory under `java.io.tmpdir` that Spark's one
+    * shutdown-delete hook removes, recursively, when the JVM exits
+    * (`Utils.createTempDir` is private[spark]). For output a returned frame
+    * still reads lazily, so it cannot be deleted any earlier.
+    */
+  def tempDir(prefix: String): String =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix).getAbsolutePath
+
   /** `df` materialized eagerly into an RDD persisted at `level`, planned as
     * the LogicalRDD an eager `localCheckpoint` returns (output partitioning
     * and ordering kept, so consumers stay exchange-free) — but with the

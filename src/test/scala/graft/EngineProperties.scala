@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.{DetRand, Num}
 import graft.operators.{Diffusion, Reshape}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.{forAll, forAllNoShrink}
@@ -59,6 +60,64 @@ object EngineProperties extends Properties("graft") {
           (x, y) => Num.fx((x - y) * (x - y), 6)), lit(0L), (acc, t) => acc + t).as("h"))
         .filter(col("k") =!= col("h")).count()
       bad == 0L
+    }
+
+  // The composed Column form DetRand's native kernels replaced, verbatim:
+  // the reference the kernels must reproduce bit for bit.
+  private object ComposedDetRand {
+    val M = 2147483648.0 // 2^31
+
+    private def fmod(x: Column): Column = x - floor(x / M).cast("double") * M
+    private def lcg(x: Column): Column = fmod(x * 69069.0 + 12345.0)
+
+    def u01(key: Column, stream: Int): Column = {
+      val seed = fmod(key * 40503.0 + stream.toDouble * 30011.0 + 12345.0)
+      (lcg(lcg(fmod(seed * (69069.0 + 2.0 * stream)))) + 0.5) / M
+    }
+
+    def gauss(key: Column, stream: Int): Column = {
+      val u1 = u01(key, 2 * stream)
+      val u2 = u01(key, 2 * stream + 1)
+      sqrt(lit(-2.0) * log(u1)) * cos(lit(2.0 * math.Pi) * u2)
+    }
+  }
+
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  // DetU01/DetGauss equal the composed Column form exactly (`===`, no
+  // tolerance) on integral and fractional keys, both through whole-stage
+  // codegen and through interpreted eval (nullSafeEval); a null key is null
+  private def kernelEqualsComposed(key0: Double, stream: Int): Boolean = {
+    val keys = spark.range(64).select(
+      when(col("id") === 63L, lit(null).cast("double"))
+        .when(col("id") % 2 === 0L, floor(lit(key0)) + col("id") * 7919L)
+        .otherwise(col("id").cast("double") * 1234.5 + key0).as("k"))
+    val out = keys.select(
+      col("k"),
+      DetRand.u01(col("k"), stream).as("u"), ComposedDetRand.u01(col("k"), stream).as("ru"),
+      DetRand.gauss(col("k"), stream).as("g"), ComposedDetRand.gauss(col("k"), stream).as("rg"))
+    val same = out.filter(col("u") === col("ru") && col("g") === col("rg")).count()
+    val nullKey = out.filter(col("k").isNull).head()
+    same == 63L && nullKey.isNullAt(1) && nullKey.isNullAt(3)
+  }
+
+  property("detrand.kernel.equals.composed") =
+    forAllNoShrink(Gen.choose(-1.9e11, 1.9e11), Gen.choose(0, 60)) { (key0, stream) =>
+      val codegen = kernelEqualsComposed(key0, stream)
+      val interpreted = withConf(
+        "spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+        kernelEqualsComposed(key0, stream)
+      }
+      codegen && interpreted
     }
 
   // Num.r6 is idempotent and within half an ulp-of-1e-6 of its argument

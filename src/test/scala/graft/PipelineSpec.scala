@@ -39,4 +39,13 @@ class PipelineSpec extends SparkSpec {
     val bestEpoch = best.getInt(0)
     assert(metrics(bestEpoch) == metrics.values.min)
   }
+
+  test("two best-checkpoint round trips in one session each read back their own dir") {
+    val first = Pipeline.bestCheckpointRoundtrip(spark)
+    val second = Pipeline.bestCheckpointRoundtrip(spark)
+    assert(first.inputFiles.toSet.intersect(second.inputFiles.toSet).isEmpty)
+    val a = first.collect()
+    val b = second.collect()
+    assert(a.length == 1 && a.toSeq == b.toSeq)
+  }
 }
